@@ -39,20 +39,12 @@ object ScaleAnnProbe {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val n = src.count()
     val dim = src.select(size(col("vec"))).head().getInt(0)
-    val path = java.nio.file.Files.createTempDirectory("graft-scale-ann")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(path).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }))
+    val path = graft.index.PosixStore.tempDirDeletedOnExit("graft-scale-ann")
     val exactTh = Bench.envDouble("SPARK_GRAFT_PROBE_EXACT", 0.0)
     val t0 = System.nanoTime()
     // exactThreshold below n forces the LSH wiring tier regardless of
     // the 20k default — this probe exists to exercise that tier
-    val idx = graft.index.VectorIndex.build(spark, path.toString, src,
+    val idx = graft.index.VectorIndex.build(spark, path, src,
       dim = dim, maxDegree = 32,
       exactThreshold = if (exactTh > 0) exactTh.toLong else math.max(1L, n / 2),
       alpha = alpha)

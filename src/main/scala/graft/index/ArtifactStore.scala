@@ -104,6 +104,15 @@ object PosixStore extends ArtifactStore {
       Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(x => Files.deleteIfExists(x))
   }
+
+  /** A fresh local temp directory that a JVM shutdown hook deletes —
+    * for scratch indexes that live as long as the process. */
+  def tempDirDeletedOnExit(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try deleteTree(dir) catch { case scala.util.control.NonFatal(_) => () }))
+    dir
+  }
 }
 
 object ArtifactStore {

@@ -24,12 +24,10 @@ import java.net.{InetAddress, ServerSocket, Socket}
   *    bit-identical semantics to the in-process router's merge, which
   *    the spec pins by comparing full result tuples.
   *
-  * This is also the POSITIVE twin of `fromIndex(loadVia=Executors)`'s
-  * in-process refusal (ShardedServing's registry hand-off refuses
-  * when executors don't share the JVM): the multi-JVM deployment the
-  * refusal message prescribes — shards resident in their own
-  * processes, served over RPC — is what [[ShardServerMain]] +
-  * [[ShardRpc.Router]] run.
+  * Both fleets load through the same [[ShardedServing.loadShard]]:
+  * the in-process [[ShardedServing.fromIndex]] calls it once per
+  * shard, and each [[ShardServerMain]] process calls it for the
+  * shards it owns.
   *
   * Protocol (all big-endian via DataStream): one byte op, then
   *  - 0x01 HELLO  -> dim:int numShards:int owned:int shard*int

@@ -1,5 +1,7 @@
 package graft.index
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.functions._
 
 /** Scatter-gather router over partitioned [[ServingIndex]] shards —
@@ -34,12 +36,6 @@ final class ShardedServing(
 
   private val shards = Array.fill(numShards)(new ServingIndex(dim, maxDegree, metric))
   private var rr = 0 // round-robin insertion cursor
-
-  /** How this fleet was populated: "inserts" (API inserts), "driver"
-    * or "executors" ([[ShardedServing.fromIndex]]'s two load paths) —
-    * operational observability, and what lets a spec assert the Auto
-    * routing actually took the executor path. */
-  @volatile var loadedVia: String = "inserts"
 
   def numPoints: Int = shards.map(_.numPoints).sum
 
@@ -225,10 +221,9 @@ final class ShardedServing(
 
   def allKeys: Seq[String] = shards.flatMap(_.allKeys).sorted.toSeq
 
-  /** Install an externally loaded shard (see
-    * [[ShardedServing.loadShard]]) — test/assembly seam for the
-    * multi-JVM deployment where each serving node loads its own
-    * shard and the router is an RPC facade over them. */
+  /** Install a [[ShardedServing.loadShard]] result as shard `i` —
+    * how [[ShardedServing.fromIndex]] assembles its fleet, and the
+    * seam specs use to assemble one shard by shard. */
   private[index] def installShard(i: Int, s: ServingIndex): Unit = shards(i) = s
 
   /** Read-only view of the shard objects — what a serving host hands
@@ -247,122 +242,38 @@ object ShardedServing {
   private[index] def globalIdFor(numShards: Int, shard: Int, localPublic: Long): Long =
     (localPublic - 1L) * numShards + shard + 1L
 
-  /** Which side materializes the shard rows in [[fromIndex]]:
-    *  - [[LoadVia.Driver]] — one collect on the driver, shards built
-    *    from driver threads. Right for the reference's serving shape
-    *    (10k × 100d ≈ 10 MB) and anything else that fits driver RAM.
-    *  - [[LoadVia.Executors]] — the rows NEVER land on the driver:
-    *    the shard-partitioned plan is consumed by `foreachPartition`,
-    *    each executor partition builds its shard(s) locally and posts
-    *    them to the in-JVM [[ExecutorShards]] hand-off registry. This
-    *    is the fleet-exceeds-driver-RAM path; see [[fromIndex]] for
-    *    the deployment contract.
-    *  - [[LoadVia.Auto]] (default) — Driver up to `driverMaxRows`
-    *    snapshot rows, Executors above. */
-  sealed trait LoadVia extends Serializable
-  object LoadVia {
-    case object Driver extends LoadVia
-    case object Executors extends LoadVia
-    case object Auto extends LoadVia
-  }
-
-  /** [[LoadVia.Auto]]'s crossover: above this many snapshot rows the
-    * driver collect is the fleet's driver-RAM wall (1M rows × (100
-    * floats + degree longs + key) ≈ 1-3 GB of Row objects) and the
-    * load routes to executors. The crossover is about driver RAM,
-    * not latency: at the 10k×100d bench shape (BenchFromIndexPaths)
-    * the two paths measure ~1.0-1.15x of each other — direct
-    * projection 5.9 vs 6.1 s warm, materialized-layout restarts 0.24
-    * vs 0.28 s — so the default stays Driver below the wall purely
-    * for the simpler failure story (no registry contract), and
-    * nothing is lost routing above it. */
-  val DriverLoadMaxRows: Long = 1000000L
-
-  /** JVM-local hand-off registry for executor-built shards, keyed by
-    * (load token, shard). In `local[*]` (and any shared-JVM test rig)
-    * executors and driver share one JVM, so the driver drains the
-    * registry right after the load job; in a real cluster each
-    * executor's registry holds its shards NODE-LOCALLY — the serving
-    * deployment keeps them there behind an RPC layer (the scatter in
-    * [[ShardedServing.search]] becomes the fan-out), and the
-    * in-process router never sees them (fromIndex fails loudly rather
-    * than silently serving an empty fleet). Entries are REMOVED on
-    * take, and the load job's `finally` [[ExecutorShards.clear]]s the
-    * token — so a job that failed after some tasks posted, or a
-    * speculative task posting after the driver drained, can't leave
-    * whole shards pinned in the registry for the JVM's lifetime. */
-  private[index] object ExecutorShards {
-    private val reg =
-      new java.util.concurrent.ConcurrentHashMap[String, ServingIndex]()
-    private def k(token: String, shard: Int) = s"$token#$shard"
-    def put(token: String, shard: Int, idx: ServingIndex): Unit =
-      reg.put(k(token, shard), idx)
-    def take(token: String, shard: Int): Option[ServingIndex] =
-      Option(reg.remove(k(token, shard)))
-    /** Drop every entry a load token left behind (failed/retried job
-      * leftovers, post-drain speculative posts). */
-    def clear(token: String): Unit =
-      reg.keySet.removeIf(_.startsWith(token + "#"))
-    private[index] def sizeForTest: Int = reg.size
-  }
-
   /** Bulk-load a built [[VectorIndex]] snapshot into a sharded router —
     * the build-once/serve-many path (reference load_index,
-    * /root/reference/src/LMDiskANN.jl:271-306, lifted to a shard
-    * fleet). The snapshot is partitioned by id (`shard = id mod
-    * numShards`, the router's O(1) routing rule) and each shard's
-    * proximity graph is PROJECTED from the snapshot's already-built
-    * global graph instead of being recomputed: each node's same-shard
-    * 1-hop ∪ 2-hop neighborhood is re-scored with the true metric and
-    * the closest knnDegree kept, ring-backboned like the bulk build.
-    * Loading is therefore O(n · degree²) candidate ids — never the
-    * O(n²/shards) all-pairs rebuild, which at 100 TB would redo the
-    * build's dominant work on every fleet restart — and the full-index
-    * single-graph `toServing` collect never happens.
-    *
-    * Every shard's graph and ring are derived in ONE plan with `shard`
-    * as a grouping/join column (per-shard ring = one window pass)
-    * instead of numShards independent job chains — the small-job
-    * scheduling alone dominated the load at 10k rows, and at scale one
-    * shuffle-partitioned plan is exactly what a 1000-executor cluster
-    * wants.
-    *
-    * With this partitioning the router's global ids coincide with the
-    * snapshot's public ids (`(id/num)*num + id mod num + 1 = id + 1`),
-    * so keys AND ids look exactly like the single-graph serving view.
-    * Per-shard freelists preserve the snapshot's LIFO recycling order.
-    *
-    * Two load paths off the ONE shard-partitioned plan ([[LoadVia]]):
-    * the Driver path collects the merged rows in a single job (driver
-    * memory = the whole fleet's rows — the reference's serving shape,
-    * bounded and documented) and fans the per-shard loads out across
-    * driver threads; the Executors path never materializes rows on
-    * the driver — `repartition(numShards, shard)` puts each shard's
-    * rows in exactly one partition, `foreachPartition` builds the
-    * shard(s) executor-locally and posts them to [[ExecutorShards]],
-    * and the driver drains the registry (shared-JVM contract: local
-    * mode and test rigs; a multi-JVM cluster keeps shards
-    * executor-resident behind RPC and this in-process drain refuses
-    * loudly). Both paths produce bit-identical shards: same rows,
-    * same per-row load, same finishLoad — only WHERE the rows
-    * materialize differs. A third form, [[loadShard]], serves the
-    * multi-JVM deployment: each serving node builds exactly its own
-    * shard from the same plan narrowed to its slice.
-    *
-    * `materialize` (default true) persists the projected fleet layout
-    * version-keyed under the index on the version's FIRST load and
-    * serves every later restart from it (see [[ensureFleetLayout]] —
-    * the reference's mmap-restart economics); pass false on a
-    * read-only store to keep the direct-projection path. */
-  def fromIndex(index: VectorIndex, numShards: Int,
-      loadVia: LoadVia = LoadVia.Auto,
-      driverMaxRows: Long = DriverLoadMaxRows,
-      materialize: Boolean = true): ShardedServing =
-    fromIndexImpl(index, numShards, loadVia, driverMaxRows, materialize)
+    * src/LMDiskANN.jl:271-306, lifted to a shard fleet): every shard
+    * is [[loadShard]]ed concurrently and installed behind one
+    * in-process router, so the in-process fleet and a fleet of
+    * serving nodes behind [[ShardRpc.Router]] share ONE load path.
+    * The snapshot is partitioned by id (`shard = id mod numShards`,
+    * the router's O(1) routing rule); with this partitioning the
+    * router's global ids coincide with the snapshot's public ids
+    * (`(id/num)*num + id mod num + 1 = id + 1`), so keys AND ids look
+    * exactly like the single-graph serving view. Per-shard freelists
+    * preserve the snapshot's LIFO recycling order. */
+  def fromIndex(index: VectorIndex, numShards: Int): ShardedServing = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val meta = index.meta
+    val router = new ShardedServing(meta.dim, numShards, meta.maxDegree, index.metric)
+    // shards are independent objects, so loading them from
+    // `numShards` threads is safe by construction; the first load of
+    // a version builds the fleet layout once (ensureFleetLayout's
+    // latch) and the others wait for it
+    val loads = (0 until numShards).map { s =>
+      Future(router.installShard(s, loadShard(index, numShards, s)))
+    }
+    loads.foreach(Await.result(_, Duration.Inf))
+    router
+  }
 
   /** Materialized serving-fleet layout — the Spark analogue of the
     * reference's restart path (`load_index` just mmaps the prebuilt
-    * `.vec`/`.adj` files, /root/reference/src/LMDiskANN.jl:271-306,
+    * `.vec`/`.adj` files, src/LMDiskANN.jl:271-306,
     * and pays ZERO graph work on restart): the projected per-shard
     * rows (shard, local id, key, vec, nbrs) are written ONCE per
     * (snapshot version, shard count) under the index —
@@ -391,23 +302,21 @@ object ShardedServing {
   private def fleetDir(index: VectorIndex, numShards: Int): String =
     s"${index.path}/fleet-n=$numShards-v=${index.meta.version}"
   /** (data path, stored eltype) the published marker names, if a
-    * marker is published. Markers written before the build-dir
-    * protocol (no `data_dir` field) resolve to the legacy fixed
-    * `data` child; markers without an `eltype` field (pre-r17) were
-    * written as plain float arrays regardless of the index's storage
-    * eltype, so they read as Float32. */
+    * marker is published. A marker missing either field predates the
+    * build-dir/eltype format; it is refused, naming the marker and the
+    * directory to delete so the next load rebuilds the layout. */
   private def publishedLayout(dir: String): Option[(String, String)] = {
     val marker = s"$dir/fleet.json"
     if (!ArtifactStore.current.exists(marker)) None
     else {
-      val j = new String(ArtifactStore.current.readBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8)
-      def field(name: String): Option[String] = {
-        val re = ("\"" + name + "\"\\s*:\\s*\"([^\"]+)\"").r
-        re.findFirstMatchIn(j).map(_.group(1))
-      }
-      Some((field("data_dir").map(d => s"$dir/$d").getOrElse(s"$dir/data"),
-        field("eltype").getOrElse("Float32")))
+      val j = SidecarJson.read(marker)
+      def field(k: String): String =
+        try j.str(k) catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(
+              s"${e.getMessage}; delete the fleet directory $dir so the next load rebuilds it", e)
+        }
+      Some((s"$dir/${field("data_dir")}", field("eltype")))
     }
   }
   private def ensureFleetLayout(index: VectorIndex, numShards: Int): (String, String) = {
@@ -424,7 +333,7 @@ object ShardedServing {
             // first-loads each write their own complete layout and
             // race only on the marker create below — never on files
             val buildDir = s"build-${java.util.UUID.randomUUID()}"
-            val (rowsDf, base) = shardRowsPlan(index, numShards, None)
+            val (rowsDf, base) = shardRowsPlan(index, numShards)
             // the layout persists vectors in the INDEX's storage
             // eltype (binary16-packed for Float16 — half the bytes,
             // the reference's T=Float16 footprint carried through the
@@ -455,53 +364,53 @@ object ShardedServing {
             fleetOnce.remove(dir, mine); mine.completeExceptionally(t); throw t
         } finally fleetOnce.remove(dir, mine)
       } else {
-        try existing.join() catch { case _: Throwable => () } // loser waits, then re-probes
+        try existing.join() catch { case NonFatal(_) => () } // loser waits, then re-probes
       }
       out = publishedLayout(dir)
     }
     out.get
   }
 
-  /** The materialized fleet rows for this (index version, shard
-    * count), building the layout first if absent — (shard, id, key,
-    * vec, nbrs) in the load paths' column order, vec decoded to
+  /** One shard's materialized fleet rows for this (index version,
+    * shard count), building the layout first if absent — (shard, id,
+    * key, vec, nbrs) in [[loadShard]]'s column order, vec decoded to
     * ARRAY<FLOAT> from the layout's recorded storage eltype. */
-  private def fleetRows(index: VectorIndex, numShards: Int,
-      onlyShard: Option[Int]): org.apache.spark.sql.DataFrame = {
+  private[index] def fleetRows(index: VectorIndex, numShards: Int,
+      shard: Int): org.apache.spark.sql.DataFrame = {
     val (dataPath, eltype) = ensureFleetLayout(index, numShards)
     val all = index.vectors.sparkSession.read.parquet(dataPath)
     val decoded =
       if (eltype == "Float16")
         all.withColumn("vec", graft.functions.VectorFunctions.halfUnpack(col("vec")))
       else all
-    onlyShard.fold(decoded)(s => decoded.filter(col("shard") === s))
+    decoded.filter(col("shard") === shard)
       .select(col("shard").cast("int").as("shard"), col("id"), col("key"),
         col("vec"), col("nbrs"))
   }
 
-  /** The shard-partitioned load plan shared by [[fromIndex]] (all
-    * shards) and [[loadShard]] (one serving node's slice): (shard,
+  /** The shard-partitioned plan that builds the fleet layout: (shard,
     * local id, key, vec, nbrs) for every live snapshot row, each
     * shard's graph PROJECTED from the snapshot's built global graph
-    * (same-shard 1-hop ∪ 2-hop re-scored, ring-backboned — see
-    * [[fromIndex]]'s scaladoc for the complexity argument).
-    * `onlyShard` narrows every stage — base scan, 2-hop candidate
-    * join, scoring joins, ring window — to one shard's slice, so a
-    * serving node pays ~1/numShards of the projection. Returns
-    * (rows plan, cached base); the caller unpersists base after
-    * consuming the rows. */
-  private def shardRowsPlan(index: VectorIndex, numShards: Int,
-      onlyShard: Option[Int])
+    * instead of being recomputed: each node's same-shard 1-hop ∪
+    * 2-hop neighborhood is re-scored with the true metric and the
+    * closest knnDegree kept, ring-backboned like the bulk build. The
+    * projection is therefore O(n · degree²) candidate ids — never the
+    * O(n²/shards) all-pairs rebuild — and every shard's graph and ring
+    * are derived in ONE plan with `shard` as a grouping/join column
+    * (per-shard ring = one window pass) instead of numShards
+    * independent job chains. Returns (rows plan, cached base); the
+    * caller unpersists base after consuming the rows. */
+  private[index] def shardRowsPlan(index: VectorIndex, numShards: Int)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.VectorFunctions
     val meta = index.meta
     val knnDegree = math.max(1, meta.maxDegree - 2)
-    val base0 = index.vectors
+    val base = index.vectors
       .withColumn("shard", pmod(col("id"), lit(numShards)).cast("int"))
       .select(col("shard"), (col("id") / numShards).cast("long").as("id"),
         col("key"), col("vec"))
-    val base = onlyShard.fold(base0)(s => base0.filter(col("shard") === s)).cache()
+      .cache()
     locally {
       val vv = base.select(col("shard"), col("id"), col("vec"))
       val dcol = Metric.distColumn(index.metric, col("a_vec"), col("b_vec"))
@@ -518,11 +427,8 @@ object ShardedServing {
       // key: middle node + shard of the endpoints), so cross-shard
       // (u, w) pairs — ~ (numShards-1)/numShards of the naive explode —
       // never materialize before the distinct
-      val left0 = adjE.select(col("u"), col("v"),
+      val left = adjE.select(col("u"), col("v"),
         pmod(col("u"), lit(numShards)).as("s"))
-      // single-shard mode: prune the u-side BEFORE the 2-hop
-      // expansion (middles stay unrestricted — they bridge shards)
-      val left = onlyShard.fold(left0)(s => left0.filter(col("s") === s))
       val hop2 = left.join(
           adjE.select(col("u").as("mid"), col("v").as("w"),
             pmod(col("v"), lit(numShards)).as("ws")),
@@ -589,11 +495,26 @@ object ShardedServing {
     }
   }
 
-  /** Per-shard freelist (snapshot LIFO order preserved) and local
-    * entrypoint under the id-mod partitioning — the finishLoad inputs
-    * every load path derives from the snapshot meta. */
-  private def shardFinishInputs(meta: IndexMeta, numShards: Int,
-      shard: Int): (Int, Seq[Int]) = {
+  /** Build ONE shard of the fleet from the snapshot — the only load
+    * path: a serving host calls `loadShard(idx, numShards, itsShard)`
+    * for exactly its own shard, and [[fromIndex]] calls it once per
+    * shard for the in-process fleet. The rows are a partition-pruned
+    * read of the materialized fleet layout (see [[ensureFleetLayout]];
+    * the layout builds once per version, by whichever load comes
+    * first), so a restart pays no graph work and the collect here is
+    * one serving node's rows by definition. Returns a FINISHED shard:
+    * the snapshot's entrypoint and its freelist (LIFO order preserved)
+    * mapped to local ids under the id-mod partitioning. */
+  def loadShard(index: VectorIndex, numShards: Int, shard: Int): ServingIndex = {
+    require(shard >= 0 && shard < numShards,
+      s"shard $shard out of range [0, $numShards)")
+    val meta = index.meta
+    val s = new ServingIndex(meta.dim, meta.maxDegree, index.metric)
+    // an empty snapshot loads nothing — and must not write an empty layout
+    if (meta.numPoints > 0L) fleetRows(index, numShards, shard).collect().foreach { r =>
+      s.loadRow(r.getLong(1).toInt, r.getString(2),
+        r.getSeq[Float](3).toArray, r.getSeq[Long](4).map(_.toInt).toArray)
+    }
     val free = meta.freelist.collect {
       case g if math.floorMod(g, numShards) == shard => (g / numShards).toInt
     }
@@ -601,150 +522,7 @@ object ShardedServing {
       if (meta.entrypoint >= 0 && math.floorMod(meta.entrypoint, numShards) == shard)
         (meta.entrypoint / numShards).toInt
       else -1
-    (entryLocal, free)
-  }
-
-  /** Build ONE shard of the fleet from the snapshot — the multi-JVM
-    * serving-node path: each serving host calls
-    * `loadShard(idx, numShards, itsShard)` for exactly its own shard
-    * (no registry hand-off, no driver fleet), and the fleet of hosts
-    * behind an RPC router serves bit-identically to [[fromIndex]]'s
-    * in-process fleet (spec-pinned via [[ShardedServing.installShard]]
-    * assembly). The plan is the shared [[shardRowsPlan]] narrowed to
-    * the shard BEFORE the 2-hop expansion, so one node pays
-    * ~1/numShards of the projection; the collect here is one serving
-    * node's rows by definition. Returns a FINISHED shard (entrypoint
-    * + freelist applied). */
-  def loadShard(index: VectorIndex, numShards: Int, shard: Int,
-      materialize: Boolean = true): ServingIndex = {
-    require(shard >= 0 && shard < numShards,
-      s"shard $shard out of range [0, $numShards)")
-    val meta = index.meta
-    val s = new ServingIndex(meta.dim, meta.maxDegree, index.metric)
-    // materialized: a node's restart is a partition-pruned read of the
-    // fleet layout (the layout itself builds once per version — by the
-    // publish job, or by whichever node loads first);
-    // materialize=false: the narrowed direct projection
-    val rows: Array[org.apache.spark.sql.Row] =
-      if (meta.numPoints == 0L) Array.empty
-      else if (materialize) fleetRows(index, numShards, Some(shard)).collect()
-      else {
-        val (rowsDf, base) = shardRowsPlan(index, numShards, Some(shard))
-        val rs = rowsDf.collect(); base.unpersist(); rs
-      }
-    rows.foreach { r =>
-      s.loadRow(r.getLong(1).toInt, r.getString(2),
-        r.getSeq[Float](3).toArray, r.getSeq[Long](4).map(_.toInt).toArray)
-    }
-    val (entryLocal, free) = shardFinishInputs(meta, numShards, shard)
     s.finishLoad(entryLocal, free)
     s
-  }
-
-  /** Bulk-load continued — see the scaladoc above [[fromIndex]]. */
-  private def fromIndexImpl(index: VectorIndex, numShards: Int,
-      loadVia: LoadVia, driverMaxRows: Long,
-      materialize: Boolean): ShardedServing = {
-    val meta = index.meta
-    val router = new ShardedServing(meta.dim, numShards, meta.maxDegree, index.metric)
-    val viaExecutors = loadVia match {
-      case LoadVia.Executors => true
-      case LoadVia.Driver => false
-      case LoadVia.Auto => meta.numPoints > driverMaxRows
-    }
-    router.loadedVia = if (viaExecutors) "executors" else "driver"
-    // materialized restarts read the fleet layout (building it on the
-    // version's first load); materialize=false (read-only stores)
-    // keeps the direct-projection path. An empty snapshot loads
-    // nothing either way — and must not write/read an empty layout.
-    val none = Option.empty[org.apache.spark.sql.DataFrame]
-    val nodf: org.apache.spark.sql.DataFrame = null
-    val (rowsDf, baseToRelease) =
-      if (meta.numPoints == 0L) (nodf, none)
-      else if (materialize) (fleetRows(index, numShards, None), none)
-      else {
-        val (r, b) = shardRowsPlan(index, numShards, None)
-        if (b.head(1).isEmpty) { b.unpersist(); (nodf, none) } else (r, Some(b))
-      }
-    if (rowsDf != null) {
-      if (viaExecutors) {
-        // ---- executor-local build: the rows NEVER land on the driver
-        // (the last driver-RAM wall in the serving-load story).
-        // repartition(numShards, shard) puts every row of a shard in
-        // exactly ONE partition; each partition builds its shard(s)
-        // in-place and posts the finished objects to the hand-off
-        // registry. put() runs only after the iterator drains, so a
-        // failed-then-retried task never publishes a partial shard (a
-        // speculative duplicate overwrites complete with complete).
-        val token = java.util.UUID.randomUUID().toString
-        val d = meta.dim; val deg = meta.maxDegree; val met = index.metric
-        // clear(token) in finally: a job that fails after some tasks
-        // posted (or a speculative task posting after the drain) must
-        // not pin whole shards in the registry for the JVM's lifetime
-        val built = try {
-          rowsDf.repartition(numShards, col("shard")).foreachPartition {
-            (it: Iterator[org.apache.spark.sql.Row]) =>
-              val local = scala.collection.mutable.Map.empty[Int, ServingIndex]
-              it.foreach { r =>
-                val shard =
-                  local.getOrElseUpdate(r.getInt(0), new ServingIndex(d, deg, met))
-                shard.loadRow(r.getLong(1).toInt, r.getString(2),
-                  r.getSeq[Float](3).toArray, r.getSeq[Long](4).map(_.toInt).toArray)
-              }
-              local.foreach { case (s, idx) => ExecutorShards.put(token, s, idx) }
-          }
-          (0 until numShards).flatMap(s =>
-            ExecutorShards.take(token, s).map(s -> _)).toMap
-        } finally ExecutorShards.clear(token)
-        // a nonempty snapshot that produced NO registry entries means
-        // the executors live in other JVMs — refuse loudly instead of
-        // serving an empty in-process fleet; the cluster deployment
-        // drains ExecutorShards inside its serving hosts (RPC scatter)
-        if (built.isEmpty)
-          throw new IllegalStateException(
-            "fromIndex(loadVia=Executors): no shard reached the in-process " +
-              "registry — executors do not share this JVM. Keep shards " +
-              "executor-resident behind the serving RPC layer (drain " +
-              "ExecutorShards in the serving hosts), or use LoadVia.Driver " +
-              "for an in-process router.")
-        built.foreach { case (s, idx) => router.shards(s) = idx }
-      } else {
-        // ---- driver build: ONE collect (a single all-partitions job),
-        // then the per-shard loads fan out concurrently. The former
-        // toLocalIterator ran a separate Spark job PER PARTITION
-        // serially AND fed all shards from one thread — the r14
-        // fi_load_warm 6.8-11.8 s was mostly that serialization, not
-        // the plan. Shards are independent objects, so loading them
-        // from `numShards` threads is safe by construction (the
-        // dedupTierEval Future idiom). Driver memory: the WHOLE
-        // fleet's rows live on the driver for the duration of the
-        // load — right for the reference's serving shape (10k × 100d
-        // ≈ 10 MB) and anything under driverMaxRows; bigger fleets
-        // route to the executor path above.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val rows = rowsDf.collect()
-        val byShard = rows.groupBy(_.getInt(0))
-        val loads = (0 until numShards).map { s =>
-          Future {
-            byShard.getOrElse(s, Array.empty[org.apache.spark.sql.Row]).foreach { r =>
-              router.shards(s).loadRow(
-                r.getLong(1).toInt,
-                r.getString(2),
-                r.getSeq[Float](3).toArray,
-                r.getSeq[Long](4).map(_.toInt).toArray)
-            }
-          }
-        }
-        loads.foreach(Await.result(_, Duration.Inf))
-      }
-    }
-    (0 until numShards).foreach { s =>
-      val (entryLocal, free) = shardFinishInputs(meta, numShards, s)
-      router.shards(s).finishLoad(entryLocal, free)
-    }
-    baseToRelease.foreach(_.unpersist())
-    router
   }
 }

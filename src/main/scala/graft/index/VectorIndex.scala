@@ -320,21 +320,12 @@ final class VectorIndex private (
     model
   }
 
-  /** The persisted PQ model for subspace count `m`, if one was fit for
-    * this index. Legacy single `pq.json` sidecars are honored when
-    * their m matches AND the metric is Euclidean: legacy models were
-    * always fit on RAW vectors, but a cosine index now encodes
-    * L2-normalized values — serving a raw-fit codebook against
-    * normalized inputs would silently degrade recall, so a cosine
-    * index refits instead. */
-  def loadPQ(m: Int = 8): Option[Quantization.PQModel] = {
-    val perM = java.nio.file.Paths.get(s"$path/pq-m$m.json")
-    if (ArtifactStore.current.exists(perM.toString)) Some(Quantization.load(path, s"pq-m$m.json"))
-    else if (metric == Metric.Euclidean &&
-        ArtifactStore.current.exists(s"$path/pq.json"))
-      Some(Quantization.load(path)).filter(_.m == m)
+  /** The persisted PQ model for subspace count `m` (its
+    * `pq-m<m>.json` sidecar), if one was fit for this index. */
+  def loadPQ(m: Int = 8): Option[Quantization.PQModel] =
+    if (ArtifactStore.current.exists(s"$path/pq-m$m.json"))
+      Some(Quantization.load(path, s"pq-m$m.json"))
     else None
-  }
 
   /** The persisted PQ code column for the CURRENT snapshot state — the
     * artifact that delivers PQ's scan-side win (an ADC pass reads
@@ -1148,9 +1139,8 @@ final class VectorIndex private (
   /** Reap on-disk artifacts unreachable from the current snapshot:
     * table segment dirs (`v=N`) not in the live segment set, and
     * `pq_codes` dirs whose segment is dead, whose model (shape +
-    * codebook content hash) no longer matches any persisted sidecar,
-    * or that use the retired version-keyed naming (never read by the
-    * per-segment resolve). Mutations deliberately never delete — old
+    * codebook content hash) no longer matches any persisted sidecar.
+    * Mutations deliberately never delete — old
     * dirs keep serving readers of previous snapshots — so disk growth
     * is bounded by explicit maintenance, exactly like VACUUM in any
     * snapshot store; the caller owns the no-readers-on-old-snapshots
@@ -1200,7 +1190,7 @@ final class VectorIndex private (
     // on the sidecars)
     val pqLoads = children(root)
       .map(_.getFileName.toString)
-      .filter(f => f == "pq.json" || f.matches("^pq-m\\d+\\.json$"))
+      .filter(_.matches("^pq-m\\d+\\.json$"))
       .map { f =>
         f -> scala.util.Try {
           val m = Quantization.load(path, f)
@@ -1239,7 +1229,6 @@ final class VectorIndex private (
     val ivfActive = ivfLoads.collect { case (_, scala.util.Success(s)) => s }.toSet
     val pqResActive = pqResLoads.collect { case (_, scala.util.Success(s)) => s }.toSet
     val codeRe = "^seg=(\\d+)-(.+)$".r
-    val legacyRe = "^v=\\d+-.+$".r
     // one reaping rule for all three per-segment artifact families:
     // dead segment, or (sidecars readable AND) model suffix no longer
     // matching any persisted sidecar. The composite's suffix is
@@ -1250,8 +1239,6 @@ final class VectorIndex private (
         p.getFileName.toString match {
           case codeRe(seg, suffix)
               if dead(seg.toLong) || (reapOk && !active(suffix)) =>
-            deleteTree(p); reaped += 1
-          case name if legacyRe.matches(name) =>
             deleteTree(p); reaped += 1
           case _ => ()
         }

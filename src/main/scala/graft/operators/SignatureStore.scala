@@ -64,24 +64,20 @@ object SignatureStore {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  /** The tombstone-set version the PUBLISHED sidecar points at.
-    * Legacy stores (pre-versioning sidecar + an in-place `tombstones`
-    * dir) read as version -1, which [[tombDir]] maps to the legacy
-    * path, so they keep serving correctly and upgrade on their next
-    * delete. */
+  /** The tombstone-set version the PUBLISHED sidecar points at (0 =
+    * none). A sidecar without `tombstones_v` predates versioned
+    * tombstones and is refused; the store must be rebuilt. */
   private def publishedTombV(path: String): Long = {
     val file = sidecar(path)
-    if (!ArtifactStore.current.exists(file)) 0L
-    else {
-      val v = SidecarJson.read(file).longOpt("tombstones_v", -1L)
-      if (v >= 0) v
-      else if (ArtifactStore.current.exists(s"$path/tombstones")) -1L
-      else 0L
-    }
+    val v = SidecarJson.read(file).longOpt("tombstones_v", -1L)
+    if (v < 0)
+      throw new IllegalArgumentException(
+        s"$file has no tombstones_v (a store from before versioned " +
+          "tombstones); rebuild it with SignatureStore.build")
+    v
   }
 
-  private def tombDir(path: String, v: Long): String =
-    if (v == -1L) s"$path/tombstones" else s"$path/tombstones-v=$v"
+  private def tombDir(path: String, v: Long): String = s"$path/tombstones-v=$v"
 
   /** Merge two published stores into a new one — day-build / shard
     * consolidation WITHOUT re-shingling any text (the BM25
@@ -174,7 +170,7 @@ object SignatureStore {
       .join(broadcast(requested.toDF("doc_id")), Seq("doc_id"))
       .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
     if (present.isEmpty) return 0L
-    val nextV = math.max(priorV, 0L) + 1L
+    val nextV = priorV + 1L
     (prior ++ present).toSeq.sorted.toDF("doc_id").coalesce(1)
       .write.mode("overwrite").parquet(tombDir(path, nextV))
     publish(spark, path, shingleK, nextV)

@@ -58,17 +58,8 @@ object AnnQueries {
     else {
       val src = source(spark, dir)
       val dim = src.select(size(col("vec"))).head().getInt(0)
-      val path = java.nio.file.Files.createTempDirectory("graft-ann")
-      // temp indexes are scratch artifacts: reap them on JVM exit
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          Files.walk(path).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
-      }))
-      val idx = VectorIndex.build(spark, path.toString, src, dim = dim, maxDegree = 32)
+      val path = graft.index.PosixStore.tempDirDeletedOnExit("graft-ann")
+      val idx = VectorIndex.build(spark, path, src, dim = dim, maxDegree = 32)
       indexCache.put(dir, idx)
       servingCache.remove(dir) // serving view of a stale session's index
       idx
@@ -355,16 +346,8 @@ object AnnQueries {
       val src = source(spark, dir)
       val dim = src.select(size(col("vec"))).head().getInt(0)
       def one(alpha: Double): VectorIndex = {
-        val path = java.nio.file.Files.createTempDirectory("graft-ann-alpha")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            import java.nio.file.{Files, Path}
-            import java.util.Comparator
-            Files.walk(path).sorted(Comparator.reverseOrder[Path]())
-              .forEach(p => Files.deleteIfExists(p))
-          } catch { case _: Throwable => () }
-        }))
-        VectorIndex.build(spark, path.toString, src, dim = dim,
+        val path = graft.index.PosixStore.tempDirDeletedOnExit("graft-ann-alpha")
+        VectorIndex.build(spark, path, src, dim = dim,
           maxDegree = AlphaCmpDegree, alpha = alpha)
       }
       val (i0, i1) = (one(0.0), one(1.2))
@@ -1321,19 +1304,11 @@ object AnnQueries {
         .select(lpad(col("id").cast("string"), 6, "0").as("key"), col("vec"))
       val dim = src.select(size(col("vec"))).head().getInt(0)
       def lifecycle(eltype: String): VectorIndex = {
-        val path = java.nio.file.Files.createTempDirectory(s"graft-eltype-$eltype")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            import java.nio.file.{Files, Path}
-            import java.util.Comparator
-            Files.walk(path).sorted(Comparator.reverseOrder[Path]())
-              .forEach(p => Files.deleteIfExists(p))
-          } catch { case _: Throwable => () }
-        }))
-        VectorIndex.create(spark, path.toString, dim = dim, maxDegree = 16,
+        val path = graft.index.PosixStore.tempDirDeletedOnExit(s"graft-eltype-$eltype")
+        VectorIndex.create(spark, path, dim = dim, maxDegree = 16,
             eltype = eltype)
           .insertBatch(src)
-        VectorIndex.load(spark, path.toString)
+        VectorIndex.load(spark, path)
       }
       val pair = (lifecycle("Float16"), lifecycle("Float64"))
       eltypeCache.put(dir, pair)
@@ -1423,19 +1398,11 @@ object AnnQueries {
       // #21/#22) under the custom metric
       require(afterDelete.deleteByKey("3"), "deleteByKey(\"3\") missed")
       afterDelete.delete(6L)
-      val metaPath = java.nio.file.Files.createTempDirectory("graft-custom-metric")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          Files.walk(metaPath).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
-      }))
-      graft.index.VectorIndex.create(spark, metaPath.toString, dim = dim,
+      val metaPath = graft.index.PosixStore.tempDirDeletedOnExit("graft-custom-metric")
+      graft.index.VectorIndex.create(spark, metaPath, dim = dim,
         maxDegree = 16, metric = m)
       val persistedName =
-        graft.index.VectorIndex.load(spark, metaPath.toString).metric.name
+        graft.index.VectorIndex.load(spark, metaPath).metric.name
       (full, afterDelete, persistedName)
     })
 

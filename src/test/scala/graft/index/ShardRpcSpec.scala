@@ -12,11 +12,7 @@ import graft.SparkSpec
   * through [[ShardRpc.Router]] — local scatter + genuinely remote
   * RPC scatter, merged by the shared (dist, global id) contract. The
   * q183-style OOS measurement (perturbed off-corpus queries) must
-  * come back TUPLE-identical to the in-process fleet's. This is the
-  * positive twin of `fromIndex(loadVia=Executors)`'s refusal when
-  * executors live in other JVMs: here they do, and the deployment
-  * the refusal message prescribes (shards resident in their own
-  * process behind the RPC scatter) actually serves. */
+  * come back TUPLE-identical to the in-process fleet's. */
 class ShardRpcSpec extends SparkSpec {
 
   private def embeddings = spark.read
@@ -39,8 +35,7 @@ class ShardRpcSpec extends SparkSpec {
     val path = tmpDir("shard-rpc")
     val idx = VectorIndex.build(spark, path, embeddings, dim = 64, maxDegree = 16)
       .deleteBatch(Seq(5L, 9L, 412L))
-    val fleet = ShardedServing.fromIndex(idx, numShards = 4,
-      ShardedServing.LoadVia.Driver)
+    val fleet = ShardedServing.fromIndex(idx, numShards = 4)
 
     // ---- serving node 2 in its own process: owns shards 2 and 3
     val javaBin = s"${sys.props("java.home")}/bin/java"

@@ -150,53 +150,29 @@ class ShardedServingSpec extends SparkSpec {
     assert(router.idForKey("7").isEmpty)
     val (_, gid) = router.insert(all.head._2, Some("fresh"))
     assert(router.idForKey("fresh").contains(gid))
-  }
-
-  test("fromIndex executor path is bit-identical to the driver path; Auto routes by row count") {
-    import org.apache.spark.sql.functions._
-    val embeddings = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val path = tmpDir("sharded-exec")
-    // deletes in the snapshot -> nonempty freelist, so finishLoad
-    // parity (LIFO recycling order) is part of what's compared
-    val idx = VectorIndex.build(spark, path, embeddings, dim = 64, maxDegree = 16)
-      .deleteBatch(Seq(13L, 77L, 260L))
-    val viaDriver =
-      ShardedServing.fromIndex(idx, numShards = 4, ShardedServing.LoadVia.Driver)
-    val viaExec =
-      ShardedServing.fromIndex(idx, numShards = 4, ShardedServing.LoadVia.Executors)
-    assert(viaDriver.loadedVia == "driver" && viaExec.loadedVia == "executors")
-    // same points, same keys, same id resolution
-    assert(viaExec.numPoints == viaDriver.numPoints)
-    assert(viaExec.allKeys == viaDriver.allKeys)
-    assert(viaExec.idForKey("7") == viaDriver.idForKey("7"))
-    // bit-identical serving: exact (key, gid, dist) tuples on 25
-    // queries, plus filtered and range scatter-gather
-    val all = embeddings.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val rng = new Random(7)
-    rng.shuffle(all.toList).take(25).foreach { case (_, q) =>
-      assert(viaExec.search(q, topk = 10) == viaDriver.search(q, topk = 10))
-      assert(viaExec.searchFiltered(q, 5, _ % 3 == 0) ==
-        viaDriver.searchFiltered(q, 5, _ % 3 == 0))
-      assert(viaExec.rangeSearch(q, radius = 0.9) ==
-        viaDriver.rangeSearch(q, radius = 0.9))
+    // deletes in the snapshot -> per-shard freelists: inserts recycle
+    // each shard's free slots LIFO in the snapshot's freelist order,
+    // with a post-load delete's slot on top of them
+    val idxDel = idx.deleteBatch(Seq(13L, 77L, 260L))
+    val fleet = ShardedServing.fromIndex(idxDel, numShards = 4)
+    assert(fleet.numPoints == 497)
+    def freeGids(s: Int): Seq[Long] =
+      idxDel.meta.freelist.filter(g => math.floorMod(g, 4L) == s).map(_ + 1L)
+    assert((0 until 4).exists(freeGids(_).size >= 2),
+      "fixture: some shard must hold two snapshot-free slots")
+    val gid42 = fleet.idForKey("42").get
+    assert(fleet.deleteByKey("42"))
+    val stacks = Array.tabulate(4)(s =>
+      freeGids(s) ++ Seq(gid42).filter(g => math.floorMod(g - 1L, 4L) == s))
+    val recycled = (0 until 4).flatMap(stacks(_)).toSet
+    // auto-keyed inserts round-robin over shards 0, 1, 2, 3, 0, ...
+    (0 until 12).foreach { i =>
+      val gid = fleet.insert(all.head._2)._2
+      val st = stacks(i % 4)
+      if (st.nonEmpty) { assert(gid == st.last, s"insert $i"); stacks(i % 4) = st.init }
+      else assert(!recycled.contains(gid), s"insert $i")
     }
-    // mutation parity: the recycled slots (freelist order) and minted
-    // ids agree, so a fleet maintained after either load converges
-    val v = all.head._2
-    val (kD, gD) = viaDriver.insert(v, Some("post-load"))
-    val (kE, gE) = viaExec.insert(v, Some("post-load"))
-    assert((kD, gD) == ((kE, gE)))
-    assert(viaDriver.deleteByKey("42") == viaExec.deleteByKey("42"))
-    assert(viaDriver.insert(v)._2 == viaExec.insert(v)._2)
-    // Auto: the 500-row snapshot stays on the driver path by default,
-    // routes to executors when the crossover is below it
-    assert(ShardedServing.fromIndex(idx, 4).loadedVia == "driver")
-    val auto = ShardedServing.fromIndex(idx, 4,
-      ShardedServing.LoadVia.Auto, driverMaxRows = 100L)
-    assert(auto.loadedVia == "executors")
-    assert(auto.numPoints == 497) // the snapshot's live count (500 - 3 deletes)
+    assert(stacks.forall(_.isEmpty))
   }
 
   test("materialized fleet layout: restarts reuse it, versions invalidate it, vacuum reaps it") {
@@ -220,18 +196,24 @@ class ShardedServingSpec extends SparkSpec {
     }
     assert(dataDir.startsWith("build-"))
     assert(new java.io.File(s"$path/fleet-n=4-v=0/$dataDir/_SUCCESS").exists())
-    // a restart (and the no-materialize direct projection) serve
-    // bit-identically to the first load
+    // the layout holds exactly the projected rows: per shard, the
+    // collected fleet rows equal the projection plan's rows
+    def rowSet(rows: Seq[org.apache.spark.sql.Row]) = rows.map(r =>
+      (r.getInt(0), r.getLong(1), r.getString(2),
+        r.getSeq[Float](3).toVector, r.getSeq[Long](4).toVector)).toSet
+    val (planDf, base) = ShardedServing.shardRowsPlan(idx, numShards = 4)
+    val planned = try rowSet(planDf.collect().toSeq) finally base.unpersist()
+    val layout = rowSet((0 until 4).flatMap(s =>
+      ShardedServing.fleetRows(idx, numShards = 4, s).collect().toSeq))
+    assert(planned.size == 200)
+    assert(layout == planned)
+    // a restart serves bit-identically to the first load
     val r2 = ShardedServing.fromIndex(idx, numShards = 4)
-    val direct = ShardedServing.fromIndex(idx, numShards = 4,
-      ShardedServing.LoadVia.Driver, materialize = false)
     val all = embeddings.filter(col("id") < 200).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val rng = new Random(31)
     rng.shuffle(all.toList).take(15).foreach { case (_, q) =>
-      val a = r1.search(q, topk = 10)
-      assert(r2.search(q, topk = 10) == a)
-      assert(direct.search(q, topk = 10) == a)
+      assert(r2.search(q, topk = 10) == r1.search(q, topk = 10))
     }
     // a mutation commits a new version: the NEXT load derives a fresh
     // layout (version-keyed — never a stale serve), and vacuum reaps
@@ -269,7 +251,7 @@ class ShardedServingSpec extends SparkSpec {
     // two writers in one dir; the protocol makes that unreachable)
     val marker = java.nio.file.Paths.get(s"$path/fleet-n=3-v=0/fleet.json")
     val foreign =
-      s"""{"num_shards":3,"version":0,"dim":64,"data_dir":"$published/data"}"""
+      s"""{"num_shards":3,"version":0,"dim":64,"eltype":"Float32","data_dir":"$published/data"}"""
     java.nio.file.Files.writeString(marker, foreign)
     val r2 = ShardedServing.fromIndex(idx, numShards = 3)
     assert(buildDirs.size == 1, "a published marker must suppress any new build")
@@ -278,6 +260,33 @@ class ShardedServingSpec extends SparkSpec {
     new Random(47).shuffle(all.toList).take(10).foreach { q =>
       assert(r2.search(q, topk = 8) == r1.search(q, topk = 8))
     }
+  }
+
+  test("a fleet marker missing data_dir or eltype is refused, naming the marker") {
+    val ss = spark
+    import ss.implicits._
+    val vecs = mkVecs(60, 16, 5).toSeq.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
+    val path = tmpDir("sharded-oldmarker")
+    val idx = VectorIndex.build(spark, path, vecs.toDF("id", "vec"), dim = 16, maxDegree = 8)
+    assert(ShardedServing.fromIndex(idx, numShards = 2).numPoints == 60)
+    val dir = s"$path/fleet-n=2-v=0"
+    val marker = java.nio.file.Paths.get(s"$dir/fleet.json")
+    val published = java.nio.file.Files.readString(marker)
+    Seq("data_dir", "eltype").foreach { k =>
+      val stripped = published.replaceAll(s""","$k":"[^"]*"""", "")
+      assert(!stripped.contains(k), stripped)
+      java.nio.file.Files.writeString(marker, stripped)
+      val e = intercept[IllegalArgumentException] {
+        ShardedServing.fromIndex(idx, numShards = 2)
+      }
+      assert(e.getMessage.contains(s"$dir/fleet.json") && e.getMessage.contains(k), e.getMessage)
+      assert(e.getMessage.contains(s"delete the fleet directory $dir"), e.getMessage)
+      intercept[IllegalArgumentException] { ShardedServing.loadShard(idx, numShards = 2, 1) }
+    }
+    // deleting the directory, as the error says, rebuilds the layout
+    ArtifactStore.current.deleteTree(dir)
+    assert(ShardedServing.fromIndex(idx, numShards = 2).numPoints == 60)
+    assert(java.nio.file.Files.readString(marker).contains("\"eltype\""))
   }
 
   test("Float16 storage rides through the fleet: layout packed binary16, marker records eltype, restarts/loadShard bit-identical, half-precision tolerances vs Float32 (r16 item 6)") {
@@ -354,8 +363,7 @@ class ShardedServingSpec extends SparkSpec {
     val path = tmpDir("sharded-pernode")
     val idx = VectorIndex.build(spark, path, embeddings, dim = 64, maxDegree = 16)
       .deleteBatch(Seq(5L, 9L, 412L))
-    val fleet = ShardedServing.fromIndex(idx, numShards = 4,
-      ShardedServing.LoadVia.Driver)
+    val fleet = ShardedServing.fromIndex(idx, numShards = 4)
     // the multi-JVM path: each "serving node" loads exactly its own
     // shard independently (no registry, no driver fleet), assembled
     // here behind one in-process router for comparison

@@ -134,26 +134,20 @@ class SignatureStoreSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(3L))
   }
 
-  test("legacy in-place tombstones dir keeps serving; next delete upgrades it") {
-    val ss = spark
-    import ss.implicits._
-    val dir = tmpDir("sig-del-legacy")
+  test("a sidecar without tombstones_v is refused, naming the file and the rebuild call") {
+    val dir = tmpDir("sig-no-tombv")
     SignatureStore.build(docsDf(corpusRows), dir)
-    // simulate a pre-versioning store: in-place dir + a sidecar with
-    // no tombstones_v key
-    Seq(1L).toDF("doc_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/tombstones")
+    // a pre-versioning sidecar: no tombstones_v key
     val raw = new String(ArtifactStore.current.readBytes(s"$dir/store.json"), "UTF-8")
     ArtifactStore.current.writeAtomic(s"$dir/store.json",
       raw.replaceAll(""","tombstones_v":\d+""", "").getBytes("UTF-8"))
-    assert(SignatureStore.load(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L, 3L))
-    // the next delete folds the legacy set into a versioned dir
-    assert(SignatureStore.delete(spark, dir, Seq(2L)) == 1L)
-    assert(spark.read.parquet(s"$dir/tombstones-v=1")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    assert(SignatureStore.load(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(3L))
+    Seq(
+      () => SignatureStore.load(spark, dir),
+      () => SignatureStore.delete(spark, dir, Seq(2L))).foreach { call =>
+      val e = intercept[IllegalArgumentException] { call() }
+      assert(e.getMessage.contains(s"$dir/store.json"), e.getMessage)
+      assert(e.getMessage.contains("SignatureStore.build"), e.getMessage)
+    }
   }
 
   test("unpublished store (no sidecar) refuses to load") {
