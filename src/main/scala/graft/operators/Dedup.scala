@@ -727,21 +727,38 @@ object Dedup {
     * band co-bucket; candidate pairs are scored by signature-estimated
     * Jaccard (matching positions / NumHashes). Returns
     * (doc_a < doc_b, est_jaccard) for pairs with est >= threshold. */
-  def lshCandidatePairs(signatures: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val banded = signatures.select(col("doc_id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(Bands - 1)), b =>
-        slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)))).as(Seq("band", "bandSig")))
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bandSig") === col("y.bandSig"))
+  def lshCandidatePairs(signatures: DataFrame, threshold: Double = 0.5): DataFrame =
+    bandJoin(signatures, signatures)
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
       .distinct()
-    cand.select(col("doc_a"), col("doc_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b), x => x))
-          .cast("double") / NumHashes).as("est_jaccard"))
+      .select(col("doc_a"), col("doc_b"), estJaccard(col("sig_a"), col("sig_b")))
       .filter(col("est_jaccard") >= threshold)
+
+  /** The MinHash LSH band join every candidate generator shares (the
+    * batch self-join, the probe-vs-store join and both streaming
+    * probes): each side's `sig` is cut into [[Bands]] bands of
+    * [[RowsPerBand]] and the band-exploded sides equi-join on
+    * (band, bandSig), so the plan hash-partitions on the band key and
+    * never compares a row against a whole side. Both sides keep all
+    * their columns, reachable as `x.<name>` / `y.<name>` (plus
+    * `x.band`); one row per MATCHING BAND. A self-join passes one
+    * frame twice — the two band explodes canonicalize alike, so the
+    * band exchange is reused. */
+  private[graft] def bandJoin(x: DataFrame, y: DataFrame): DataFrame = {
+    def banded(sigs: DataFrame) = sigs.select(sigs.columns.map(col) :+
+      posexplode(transform(sequence(lit(0), lit(Bands - 1)), b =>
+        slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)))).as(Seq("band", "bandSig")): _*)
+    banded(x).as("x").join(banded(y).as("y"),
+      col("x.band") === col("y.band") && col("x.bandSig") === col("y.bandSig"))
   }
+
+  /** `est_jaccard`: the signature-estimated Jaccard of two MinHash
+    * signatures (matching positions / [[NumHashes]]). */
+  private[graft] def estJaccard(a: Column, b: Column): Column =
+    (size(filter(zip_with(a, b, (p, q) => p === q), m => m)).cast("double") / NumHashes)
+      .as("est_jaccard")
 
   /** Exact edit-distance VERIFICATION of fuzzy-dedup candidate pairs —
     * the second stage of the standard candidate-generate-then-verify
@@ -768,14 +785,23 @@ object Dedup {
       .join(broadcast(pairs.select(col("doc_a"), col("doc_b"))), Seq("doc_a"))
     val withB = docs.select(col(idCol).as("doc_b"), col(textCol).as("text_b"))
       .join(broadcast(withA), Seq("doc_b"))
-    val maxLen = greatest(length(col("text_a")), length(col("text_b")))
-    withB
-      .withColumn("lev", levenshtein(col("text_a"), col("text_b")))
+    withEditSimilarity(withB, col("text_a"), col("text_b"), tau)
+      .select(col("doc_a"), col("doc_b"), col("lev"), col("sim"), col("verified"))
+  }
+
+  /** Appends the edit-verification columns for texts `a` and `b`:
+    * `lev` (character Levenshtein distance), `sim` = 1 − lev/max(|a|,
+    * |b|) rounded to 4 decimals (1.0 for two empty texts) and
+    * `verified` = (sim ≥ tau) as INT — the one definition the batch
+    * and streaming verifiers share. */
+  private[graft] def withEditSimilarity(
+      df: DataFrame, a: Column, b: Column, tau: Double): DataFrame = {
+    val maxLen = greatest(length(a), length(b))
+    df.withColumn("lev", levenshtein(a, b))
       .withColumn("sim",
         when(maxLen === 0, lit(1.0)).otherwise(
           round(lit(1.0) - col("lev").cast("double") / maxLen.cast("double"), 4) + lit(0.0)))
       .withColumn("verified", (col("sim") >= tau).cast("int"))
-      .select(col("doc_a"), col("doc_b"), col("lev"), col("sim"), col("verified"))
   }
 
   /** (doc_id, sid): content-addressed shingle ids via the rolling
@@ -824,20 +850,13 @@ object Dedup {
     * (batch_id, store_id, est_jaccard ≥ threshold). Ids need not be
     * disjoint; a doc probed against itself reports est 1.0. */
   def lshCandidatesAcross(probeSigs: DataFrame, storeSigs: DataFrame,
-      threshold: Double = 0.5): DataFrame = {
-    def banded(sigs: DataFrame) = sigs.select(col("doc_id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(Bands - 1)), b =>
-        slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)))).as(Seq("band", "bandSig")))
-    val cand = banded(probeSigs).as("x").join(banded(storeSigs).as("y"),
-        col("x.band") === col("y.band") && col("x.bandSig") === col("y.bandSig"))
+      threshold: Double = 0.5): DataFrame =
+    bandJoin(probeSigs, storeSigs)
       .select(col("x.doc_id").as("batch_id"), col("y.doc_id").as("store_id"),
         col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
       .distinct()
-    cand.select(col("batch_id"), col("store_id"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b), x => x))
-          .cast("double") / NumHashes).as("est_jaccard"))
+      .select(col("batch_id"), col("store_id"), estJaccard(col("sig_a"), col("sig_b")))
       .filter(col("est_jaccard") >= threshold)
-  }
 
   /** SimHash over ranked token IDs with counts (Charikar 2002). Input:
     * (doc_id, tid, cnt). bit b set iff sum over tokens of

@@ -21,6 +21,13 @@ import org.apache.spark.sql.functions._
   * is a fixed left-to-right expression both engines evaluate with
   * identical IEEE semantics.
   *
+  * One pipeline, one definition per step: [[buildPostings]] tokenizes
+  * a corpus into postings + stats (cached in memory by the q127/q128/
+  * q195 artifact, persisted by [[buildIndex]]); [[bm25TopKFromPostings]]
+  * and [[searchIndex]] each pick their postings slice and df rows and
+  * hand them to the one scoring chain; the persisted layout's
+  * `bm25.json` has one verifying reader and one writer.
+  *
   * Scale shape (the part that must survive 100 TB):
   *   - Doc length is `size(tokens)` attached per ROW before the
   *     explode and carried through the `tf` grouping (it is
@@ -55,89 +62,51 @@ object Retrieval {
 
   val FpScale = 1000000.0
 
-  /** BM25 per-(query, document) scores in 1e6 fixed point.
+  /** The BM25 postings of a corpus — the ONE tokenize + aggregation
+    * every BM25 path reads: (idCol, dl, term, tf) rows plus the scalar
+    * corpus stats (n_docs, sum_dl). `materialize` turns the lazy
+    * postings plan into the frame the caller keeps (a cache for the
+    * in-memory artifact, a write + read-back for [[buildIndex]]); the
+    * stats come from a separate map-only scan of `docs`.
     *
-    * @param docs    (idCol, textCol) corpus
-    * @param queries (query_id, qtext) — eval-sized; broadcast
-    * @return (query_id, idCol, score_fp BIGINT); only documents
-    *         sharing ≥1 term with the query appear (score > 0 rows —
-    *         BM25's sparse support, which is what makes the inverted
-    *         shape scale: the dense (query × corpus) matrix never
-    *         materializes)
-    */
-  def bm25ScoresFp(
+    * Corpus contract, checked against the materialized postings:
+    * n_docs (= count(documents), which every idf reads) must equal the
+    * number of distinct doc ids in the postings. A NULL-text document
+    * is counted but has no postings row, and a duplicated doc id is
+    * counted twice; either would shift every idf silently, so both are
+    * refused. Returns (postings, n_docs, sum_dl). */
+  def buildPostings(
       docs: DataFrame,
-      queries: DataFrame,
-      k1: Double = 1.2,
-      b: Double = 0.75,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text")(
+      materialize: DataFrame => DataFrame): (DataFrame, Long, Long) = {
     val base = docs.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
-    val tf = base
+    val postings = materialize(base
       .select(col(idCol), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("term"))
-      .groupBy(col(idCol), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
-    val stats = base.agg(count(lit(1)).as("n_docs"),
-      sum(size(col("toks")).cast("long")).as("sum_dl"))
-
-    // Query tf is ignored (set semantics) — standard for short queries.
-    val qt = queries
-      .select(col("query_id"), explode(TextAnalysis.tokens(col("qtext"))).as("term"))
-      .distinct()
-    val tfq = tf.join(broadcast(qt.select(col("term")).distinct()), Seq("term"), "left_semi")
-      .localCheckpoint(true)
-    val dfx = tfq.groupBy(col("term")).agg(count(lit(1)).as("df"))
-
-    tfq
-      .join(broadcast(qt), Seq("term"))
-      .join(broadcast(dfx), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col(idCol), contribFp(k1, b).as("contrib_fp"))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("contrib_fp")).as("score_fp"))
+      .groupBy(col(idCol), col("dl"), col("term")).agg(count(lit(1)).as("tf")))
+    val st = base.agg(count(lit(1)).as("n_docs"),
+      sum(size(col("toks")).cast("long")).as("sum_dl")).head()
+    val nDocs = st.getLong(0)
+    val distinctDocs = postings.select(col(idCol)).distinct().count()
+    require(distinctDocs == nDocs,
+      s"BM25 corpus contract violated: $nDocs documents but $distinctDocs distinct " +
+        s"$idCol values in the postings (n_docs must equal the distinct doc count: " +
+        "every document needs a unique id and non-NULL text)")
+    (postings, nDocs, st.getLong(1))
   }
 
-  /** [[bm25ScoresFp]] over a PRECOMPUTED postings frame (idCol, dl,
-    * term, tf) plus its scalar corpus stats — the in-memory twin of
-    * [[searchIndex]] (same shared contribution expression, stats as
-    * plan literals), for pipelines that tokenize once and serve many
-    * retrieval analyses off one postings table. Bit-identical to the
-    * scan path over the same corpus by construction.
+  /** BM25 top-k per query over a postings frame from [[buildPostings]]
+    * — the in-memory twin of [[searchIndex]] (same scoring chain, stats
+    * as plan literals), for pipelines that tokenize once and serve many
+    * retrieval analyses off one postings table.
     *
     * EAGER at plan-construction time: the query-term postings slice is
-    * localCheckpoint'ed here (two consumers — the df aggregate and the
-    * scoring join — must read one materialization), so calling this
-    * runs a Spark job even if the returned plan is never executed, and
-    * the checkpoint's block ownership transfers to the CALLER —
-    * consume the result and release via [[graft.plans.Blocks.release]]
-    * (explain/audit paths included), or the blocks stay pinned. */
-  def bm25ScoresFpFromPostings(
-      postings: DataFrame,
-      nDocs: Long,
-      sumDl: Long,
-      queries: DataFrame,
-      k1: Double = 1.2,
-      b: Double = 0.75,
-      idCol: String = "doc_id"): DataFrame = {
-    val qt = queries
-      .select(col("query_id"), explode(TextAnalysis.tokens(col("qtext"))).as("term"))
-      .distinct()
-    val tfq = postings
-      .join(broadcast(qt.select(col("term")).distinct()), Seq("term"), "left_semi")
-      .localCheckpoint(true)
-    val dfx = tfq.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    tfq
-      .join(broadcast(qt), Seq("term"))
-      .join(broadcast(dfx), Seq("term"))
-      .select(col("query_id"), col(idCol), col("tf"), col("dl"), col("df"),
-        lit(nDocs).as("n_docs"), lit(sumDl).as("sum_dl"))
-      .select(col("query_id"), col(idCol), contribFp(k1, b).as("contrib_fp"))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("contrib_fp")).as("score_fp"))
-  }
-
-  /** BM25 top-k over a precomputed postings frame — the
-    * [[bm25TopK]] twin of [[bm25ScoresFpFromPostings]]. */
+    * localCheckpoint'ed here (see the scale notes above), which runs a
+    * Spark job even if the returned plan is never executed, and its
+    * block ownership transfers to the CALLER — consume the result and release
+    * via [[graft.plans.Blocks.release]] (explain/audit paths included),
+    * or the blocks stay pinned. */
   def bm25TopKFromPostings(
       postings: DataFrame,
       nDocs: Long,
@@ -146,45 +115,66 @@ object Retrieval {
       k: Int,
       k1: Double = 1.2,
       b: Double = 0.75,
-      idCol: String = "doc_id"): DataFrame =
-    topKFromScores(
-      bm25ScoresFpFromPostings(postings, nDocs, sumDl, queries, k1, b, idCol),
-      idCol, k)
-
-  /** The per-(query, doc, term) BM25 contribution in 1e6 fixed point,
-    * over columns (tf, dl, df, n_docs, sum_dl) — ONE definition shared
-    * by the scan path and the served-index path, so the two are
-    * bit-identical by construction. */
-  private def contribFp(k1: Double, b: Double): Column = {
-    val avgdl = col("sum_dl").cast("double") / col("n_docs")
-    val idf = log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
-    val num = col("tf") * lit(k1 + 1.0)
-    val den = col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * (col("dl") / avgdl))
-    round(idf * num / den * lit(FpScale), 0).cast("long")
+      idCol: String = "doc_id"): DataFrame = {
+    val qt = queryTerms(queries)
+    val slice = postings
+      .join(broadcast(qt.select(col("term")).distinct()), Seq("term"), "left_semi")
+      .localCheckpoint(true)
+    val dfx = slice.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    scoreTopK(slice, dfx, qt, nDocs, sumDl, k, k1, b, idCol)
   }
 
-  /** BM25 top-k per query: (query_id, idCol, score DOUBLE, rnk INT),
-    * score descending, doc-id tie-break — via the bounded-heap top-k
-    * aggregate on dist = -score_fp. */
-  def bm25TopK(
-      docs: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    topKFromScores(bm25ScoresFp(docs, queries, k1, b, idCol, textCol), idCol, k)
+  /** Distinct (query_id, term) rows of a (query_id, qtext) query set —
+    * query tf is ignored (set semantics), standard for short queries. */
+  private def queryTerms(queries: DataFrame): DataFrame =
+    queries
+      .select(col("query_id"), explode(TextAnalysis.tokens(col("qtext"))).as("term"))
+      .distinct()
 
-  private def topKFromScores(scores: DataFrame, idCol: String, k: Int): DataFrame = {
+  /** The ONE BM25 scoring chain, shared by the in-memory and the
+    * served path so the two are bit-identical by construction: a
+    * postings slice (idCol, dl, term, tf), its df rows (term, df) and
+    * the query terms → per-(query, doc, term) fixed-point contributions
+    * → integer per-doc sums → top-k per query: (query_id, idCol,
+    * score DOUBLE, rnk INT), score descending, doc-id tie-break, via
+    * the bounded-heap top-k aggregate on dist = -score_fp. Only
+    * documents sharing >= 1 term with the query appear (BM25's sparse
+    * support: the dense query × corpus matrix never materializes). */
+  private def scoreTopK(
+      slice: DataFrame,
+      dfx: DataFrame,
+      qt: DataFrame,
+      nDocs: Long,
+      sumDl: Long,
+      k: Int,
+      k1: Double,
+      b: Double,
+      idCol: String): DataFrame = {
     import graft.functions.VectorFunctions.topKPairs
-    scores
+    slice
+      .join(broadcast(qt), Seq("term"))
+      .join(broadcast(dfx), Seq("term"))
+      .select(col("query_id"), col(idCol), col("tf"), col("dl"), col("df"),
+        lit(nDocs).as("n_docs"), lit(sumDl).as("sum_dl"))
+      .select(col("query_id"), col(idCol), contribFp(k1, b).as("contrib_fp"))
+      .groupBy(col("query_id"), col(idCol))
+      .agg(sum(col("contrib_fp")).as("score_fp"))
       .groupBy(col("query_id"))
       .agg(topKPairs((-col("score_fp")).cast("double"), col(idCol), k).as("tk"))
       .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "p")))
       .select(col("query_id"), col("p.id").as(idCol),
         ((-col("p.dist")).cast("long") / lit(FpScale)).as("score"),
         (col("pos") + 1).cast("int").as("rnk"))
+  }
+
+  /** The per-(query, doc, term) BM25 contribution in 1e6 fixed point,
+    * over columns (tf, dl, df, n_docs, sum_dl). */
+  private def contribFp(k1: Double, b: Double): Column = {
+    val avgdl = col("sum_dl").cast("double") / col("n_docs")
+    val idf = log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
+    val num = col("tf") * lit(k1 + 1.0)
+    val den = col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * (col("dl") / avgdl))
+    round(idf * num / den * lit(FpScale), 0).cast("long")
   }
 
   // ------------------------------------------------- persisted index
@@ -198,6 +188,47 @@ object Retrieval {
   private def dfDir(path: String, v: Long): String =
     if (v == 0L) s"$path/df" else s"$path/df-v=$v"
   private def tombDir(path: String, v: Long): String = s"$path/tombstones-v=$v"
+
+  /** The `bm25.json` sidecar: scalar stats, plus the tombstone count
+    * and df version once a delete has run (dfV > 0). */
+  private final case class Sidecar(
+      nDocs: Long, sumDl: Long, vocabSize: Long, nTombstones: Long = 0L, dfV: Long = 0L) {
+    def fingerprint: String = graft.index.Fingerprint.ofString(s"$nDocs|$sumDl|$vocabSize")
+  }
+
+  /** Read `path/bm25.json` and verify its FNV-1a stats fingerprint —
+    * the only sidecar reader, so no caller can use (or re-sign) a
+    * corrupted or tampered idf. */
+  private def readSidecar(path: String): Sidecar = {
+    val file = s"$path/bm25.json"
+    val j = graft.index.SidecarJson.read(file)
+    val side = Sidecar(j.long("n_docs"), j.long("sum_dl"), j.long("vocab_size"),
+      j.longOpt("n_tombstones", 0L), j.longOpt("df_v", 0L))
+    if (side.fingerprint != j.str("fingerprint"))
+      throw new IllegalArgumentException(
+        s"$file: stats fingerprint ${side.fingerprint} != ${j.str("fingerprint")} " +
+          "(corrupted or tampered sidecar)")
+    side
+  }
+
+  /** Publish `path/bm25.json` atomically — written LAST by every
+    * layout writer (content first, pointer-equivalent last). */
+  private def writeSidecar(path: String, side: Sidecar): Unit = {
+    val deletes =
+      if (side.dfV > 0L) s""","n_tombstones":${side.nTombstones},"df_v":${side.dfV}""" else ""
+    graft.index.ArtifactStore.current.writeAtomic(s"$path/bm25.json",
+      (s"""{"fingerprint":"${side.fingerprint}","n_docs":${side.nDocs},""" +
+        s""""sum_dl":${side.sumDl},"vocab_size":${side.vocabSize}$deletes}""")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** Write `df` to `dir` range-partitioned AND sorted by term (the
+    * layout the query-vocab `IN` filter prunes) and read it back. */
+  private def writeByTerm(df: DataFrame, dir: String): DataFrame = {
+    df.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
+      .write.mode("overwrite").parquet(dir)
+    df.sparkSession.read.parquet(dir)
+  }
 
   /** Build the persistent BM25 serving layout under `path` — the
     * "fit once, serve forever" artifact (the IVF/PQ/int8/BPE sidecar
@@ -216,33 +247,19 @@ object Retrieval {
     *   - `bm25.json` — scalar stats (n_docs, sum_dl, vocab_size) +
     *     FNV-1a fingerprint over them, written LAST (publish order:
     *     content first, pointer-equivalent last), verified on load
-    */
+    *
+    * A corpus violating the [[buildPostings]] contract is refused
+    * before `df/` and `bm25.json` are written. */
   def buildIndex(
       docs: DataFrame,
       path: String,
       idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    import graft.index.{ArtifactStore, Fingerprint}
-    val spark = docs.sparkSession
-    val base = docs.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
-    val tf = base
-      .select(col(idCol), size(col("toks")).cast("long").as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy(col(idCol), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
-    tf.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$path/postings")
-    val post = spark.read.parquet(s"$path/postings")
-    post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$path/df")
-    val vocabSize = spark.read.parquet(s"$path/df").count()
-    val st = base.agg(count(lit(1)).as("n_docs"),
-      sum(size(col("toks")).cast("long")).as("sum_dl")).head()
-    val (nDocs, sumDl) = (st.getLong(0), st.getLong(1))
-    val fp = Fingerprint.ofString(s"$nDocs|$sumDl|$vocabSize")
-    ArtifactStore.current.writeAtomic(s"$path/bm25.json",
-      (s"""{"fingerprint":"$fp","n_docs":$nDocs,"sum_dl":$sumDl,""" +
-        s""""vocab_size":$vocabSize}""").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val (post, nDocs, sumDl) =
+      buildPostings(docs, idCol, textCol)(writeByTerm(_, s"$path/postings"))
+    val vocabSize =
+      writeByTerm(post.groupBy(col("term")).agg(count(lit(1)).as("df")), s"$path/df").count()
+    writeSidecar(path, Sidecar(nDocs, sumDl, vocabSize))
   }
 
   /** Merge BM25 shard indexes into one [[buildIndex]]-shaped layout —
@@ -253,51 +270,40 @@ object Retrieval {
     * re-scan, no re-tokenize; the only data-sized work is re-sorting
     * the unioned postings by term so the merged layout keeps its
     * file/row-group pruning. Disjointness is VERIFIED (distinct doc
-    * count over the merged postings must equal Σ n_docs — every doc
-    * has ≥ 1 postings row since the tokenizer never returns an empty
-    * array), not assumed: a doc in two shards would silently
-    * double-count df and corrupt every idf. */
+    * count over the merged postings must equal Σ n_docs — every
+    * shard's build enforced one postings doc per counted document),
+    * not assumed: a doc in two shards would silently double-count df
+    * and corrupt every idf. */
   def mergeIndexes(
       spark: org.apache.spark.sql.SparkSession,
       paths: Seq[String],
       out: String,
       idCol: String = "doc_id"): Unit = {
-    import graft.index.{ArtifactStore, Fingerprint, SidecarJson}
     require(paths.nonEmpty, "mergeIndexes needs >= 1 input shard")
     val sides = paths.map { p =>
-      val s = SidecarJson.read(s"$p/bm25.json")
-      val fp = Fingerprint.ofString(
-        s"${s.long("n_docs")}|${s.long("sum_dl")}|${s.long("vocab_size")}")
-      if (fp != s.str("fingerprint"))
-        throw new IllegalArgumentException(
-          s"$p/bm25.json: stats fingerprint mismatch (corrupted shard refuses to merge)")
+      val s = readSidecar(p)
       // a tombstoned shard's postings still hold the forgotten rows;
       // merging them would resurrect deleted docs in the merged stats
-      if (s.longOpt("n_tombstones", 0L) > 0L)
+      if (s.nTombstones > 0L)
         throw new IllegalArgumentException(
-          s"$p has ${s.longOpt("n_tombstones", 0L)} tombstoned docs; " +
+          s"$p has ${s.nTombstones} tombstoned docs; " +
             "rebuild/compact the shard before merging")
       s
     }
-    val nDocs = sides.map(_.long("n_docs")).sum
-    val sumDl = sides.map(_.long("sum_dl")).sum
+    val nDocs = sides.map(_.nDocs).sum
+    val sumDl = sides.map(_.sumDl).sum
     val posts = paths.map(p => spark.read.parquet(s"$p/postings")).reduce(_.unionByName(_))
     val distinctDocs = posts.select(col(idCol)).distinct().count()
     if (distinctDocs != nDocs)
       throw new IllegalArgumentException(
         s"shards share documents: ${nDocs - distinctDocs} doc ids appear in more than " +
           "one input (df/idf would double-count); merge inputs must be disjoint")
-    posts.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$out/postings")
-    paths.map(p => spark.read.parquet(s"$p/df")).reduce(_.unionByName(_))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$out/df")
-    val vocabSize = spark.read.parquet(s"$out/df").count()
-    val fp = Fingerprint.ofString(s"$nDocs|$sumDl|$vocabSize")
-    ArtifactStore.current.writeAtomic(s"$out/bm25.json",
-      (s"""{"fingerprint":"$fp","n_docs":$nDocs,"sum_dl":$sumDl,""" +
-        s""""vocab_size":$vocabSize}""").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeByTerm(posts, s"$out/postings")
+    val vocabSize = writeByTerm(
+      paths.map(p => spark.read.parquet(s"$p/df")).reduce(_.unionByName(_))
+        .groupBy(col("term")).agg(sum(col("df")).as("df")),
+      s"$out/df").count()
+    writeSidecar(out, Sidecar(nDocs, sumDl, vocabSize))
   }
 
   /** Right-to-be-forgotten delete against a [[buildIndex]] layout —
@@ -311,7 +317,9 @@ object Retrieval {
     *   - `df/` is rewritten minus each deleted doc's term memberships
     *     (df rows reaching 0 drop — the term leaves the vocabulary)
     *   - sidecar n_docs/sum_dl subtract the deleted docs' counts/
-    *     lengths, vocab_size recounts, fingerprint re-signs
+    *     lengths, vocab_size recounts, fingerprint re-signs — after the
+    *     old sidecar's fingerprint verified, so a tampered sidecar is
+    *     refused, never re-signed
     *   - postings rows stay on disk (rewriting the corpus-sized
     *     layout per delete batch would be O(index)); `tombstones/`
     *     records the ids and [[searchIndex]] anti-joins them out —
@@ -336,13 +344,10 @@ object Retrieval {
       path: String,
       ids: Seq[Long],
       idCol: String = "doc_id"): Long = {
-    import graft.index.{ArtifactStore, Fingerprint, SidecarJson}
-    val side = SidecarJson.read(s"$path/bm25.json")
-    val (nDocs, sumDl) = (side.long("n_docs"), side.long("sum_dl"))
-    val oldV = side.longOpt("df_v", 0L)
+    val side = readSidecar(path)
     val prior: Set[Long] =
-      if (side.longOpt("n_tombstones", 0L) > 0L)
-        spark.read.parquet(tombDir(path, oldV))
+      if (side.nTombstones > 0L)
+        spark.read.parquet(tombDir(path, side.dfV))
           .collect().map(_.getLong(0)).toSet
       else Set.empty
     val newIds = ids.distinct.filterNot(prior)
@@ -357,33 +362,27 @@ object Retrieval {
     val (nDeleted, dlDeleted) = (st.getLong(0), st.getLong(1))
     val ddf = hit.select(col("term"), col(idCol)).distinct()
       .groupBy(col("term")).agg(count(lit(1)).as("ddf"))
-    val newV = oldV + 1L
-    val newDf = spark.read.parquet(dfDir(path, oldV))
+    val newV = side.dfV + 1L
+    val newDf = spark.read.parquet(dfDir(path, side.dfV))
       .join(ddf, Seq("term"), "left")
       .select(col("term"), (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
       .filter(col("df") > 0L)
-    newDf.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(dfDir(path, newV))
+    val vocabSize = writeByTerm(newDf, dfDir(path, newV)).count()
     graft.plans.Blocks.release(hit) // ddf (from hit) consumed by the write above
-    val vocabSize = spark.read.parquet(dfDir(path, newV)).count()
     val allTombs = (prior ++ newIds).toSeq.sorted
     allTombs.toDF(idCol).coalesce(1)
       .write.mode("overwrite").parquet(tombDir(path, newV))
     // content (df-v, tombstones-v) is durable; the sidecar swap below
     // is the commit point — a reader on the old sidecar never sees it
-    val (n2, s2) = (nDocs - nDeleted, sumDl - dlDeleted)
-    val fp = Fingerprint.ofString(s"$n2|$s2|$vocabSize")
-    ArtifactStore.current.writeAtomic(s"$path/bm25.json",
-      (s"""{"fingerprint":"$fp","n_docs":$n2,"sum_dl":$s2,""" +
-        s""""vocab_size":$vocabSize,"n_tombstones":${allTombs.length},"df_v":$newV}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeSidecar(path, Sidecar(side.nDocs - nDeleted, side.sumDl - dlDeleted, vocabSize,
+      allTombs.length.toLong, newV))
     nDeleted
   }
 
   /** Serve BM25 top-k from a [[buildIndex]] layout — bit-identical to
-    * [[bm25TopK]] over the same corpus (one shared contribution
-    * expression), without touching the corpus: the query vocabulary
-    * (an eval-sized driver list — that boundedness is what buys the
+    * [[bm25TopKFromPostings]] over the same corpus (one shared scoring
+    * chain), without touching the corpus: the query vocabulary (an
+    * eval-sized driver list — that boundedness is what buys the
     * pushdown) filters the postings/df scans as an `IN` predicate the
     * parquet reader prunes with; scalar stats come from the verified
     * sidecar as plan literals. */
@@ -395,40 +394,21 @@ object Retrieval {
       k1: Double = 1.2,
       b: Double = 0.75,
       idCol: String = "doc_id"): DataFrame = {
-    import graft.index.{Fingerprint, SidecarJson}
-    val side = SidecarJson.read(s"$path/bm25.json")
-    val (nDocs, sumDl, vocabSize) =
-      (side.long("n_docs"), side.long("sum_dl"), side.long("vocab_size"))
-    val fp = Fingerprint.ofString(s"$nDocs|$sumDl|$vocabSize")
-    if (fp != side.str("fingerprint"))
-      throw new IllegalArgumentException(
-        s"$path/bm25.json: stats fingerprint $fp != ${side.str("fingerprint")} " +
-          "(corrupted or tampered sidecar)")
-    val qt = queries
-      .select(col("query_id"), explode(TextAnalysis.tokens(col("qtext"))).as("term"))
-      .distinct()
+    val side = readSidecar(path)
+    val qt = queryTerms(queries)
     val vocab = qt.select(col("term")).distinct().collect().map(_.getString(0)).toSeq
-    val dfV = side.longOpt("df_v", 0L)
     val post0 = spark.read.parquet(s"$path/postings").filter(col("term").isin(vocab: _*))
     // deleteFromIndex leaves postings rows in place and records the
     // forgotten ids under the sidecar's df_v; the anti-join
     // (broadcast, over the eval-bounded postings slice) completes the
     // exact rebuilt-without semantics.
     val post =
-      if (side.longOpt("n_tombstones", 0L) > 0L)
-        post0.join(broadcast(spark.read.parquet(tombDir(path, dfV))),
+      if (side.nTombstones > 0L)
+        post0.join(broadcast(spark.read.parquet(tombDir(path, side.dfV))),
           Seq(idCol), "left_anti")
       else post0
-    val dfx = spark.read.parquet(dfDir(path, dfV)).filter(col("term").isin(vocab: _*))
-    val scores = post
-      .join(broadcast(qt), Seq("term"))
-      .join(broadcast(dfx), Seq("term"))
-      .select(col("query_id"), col(idCol), col("tf"), col("dl"), col("df"),
-        lit(nDocs).as("n_docs"), lit(sumDl).as("sum_dl"))
-      .select(col("query_id"), col(idCol), contribFp(k1, b).as("contrib_fp"))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("contrib_fp")).as("score_fp"))
-    topKFromScores(scores, idCol, k)
+    val dfx = spark.read.parquet(dfDir(path, side.dfV)).filter(col("term").isin(vocab: _*))
+    scoreTopK(post, dfx, qt, side.nDocs, side.sumDl, k, k1, b, idCol)
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Buettcher 2009) of

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.operators.{Retrieval, TextAnalysis}
 import Tables._
@@ -52,32 +53,11 @@ object RetrievalQueries {
     // staleness inside the mapping so a lost race returns the winner
     else postingsCache.compute(dir, (_, cur) => {
       if (cur != null && !cur._1.sparkSession.sparkContext.isStopped) cur
-      else {
-        val base = spread(docs(spark, dir))
-          .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-        val tf = base
-          .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-            explode(col("toks")).as("term"))
-          .groupBy(col("doc_id"), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
-          .cache()
-        tf.count()
-        val st = base.agg(count(lit(1)).as("n_docs"),
-          sum(size(col("toks")).cast("long")).as("sum_dl")).head()
-        // consumers derive idf from n_docs = count(documents); the
-        // pre-artifact q158 path computed countDistinct(doc_id) over
-        // the postings. The two agree exactly when every document
-        // tokenizes to >= 1 term (the corpus contract — the tokenizer
-        // never emits an empty array for non-null text, and NULL text
-        // is excluded by contract). Assert it ONCE here, against the
-        // already-cached tf, so a violating corpus fails loudly
-        // instead of silently shifting every idf.
-        val distinctDocs = tf.select(col("doc_id")).distinct().count()
-        require(distinctDocs == st.getLong(0),
-          s"corpusPostings($dir): ${st.getLong(0)} documents but only " +
-            s"$distinctDocs appear in the postings — a document with " +
-            "NULL/untokenizable text violates the idf contract " +
-            "(n_docs = count(documents))")
-        (tf, st.getLong(0), st.getLong(1))
+      else Retrieval.buildPostings(spread(docs(spark, dir))) { tf =>
+        // count() fills the cache the builder's contract check then reads
+        val cached = tf.cache()
+        cached.count()
+        cached
       }
     })
   }
@@ -95,7 +75,7 @@ object RetrievalQueries {
   def dropCaches(): Unit = {
     import scala.jdk.CollectionConverters._
     postingsCache.values.asScala.foreach { case (df, _, _) =>
-      try df.unpersist(false) catch { case _: Throwable => () }
+      try df.unpersist(false) catch { case NonFatal(_) => () }
     }
     postingsCache.clear()
   }
@@ -109,7 +89,7 @@ object RetrievalQueries {
         array_join(slice(TextAnalysis.tokens(col("text")), 1, 4), " ").as("qtext"))
 
   /** BM25 top-10 per query (q127) — the sparse-retrieval operator on
-    * its own. See [[graft.operators.Retrieval.bm25ScoresFp]] for the
+    * its own. See [[graft.operators.Retrieval.bm25TopKFromPostings]] for the
     * one-tokenize-pass / broadcast-query-terms / bounded-heap-top-k
     * scale shape and the fixed-point determinism contract. */
   def bm25TopDocs(spark: SparkSession, dir: String): DataFrame = {
@@ -207,7 +187,8 @@ object RetrievalQueries {
 
   /** Shared BM25 CTE chain ending in `s(query_id, doc_id, score_fp)`.
     * Every double expression mirrors the Spark operator's evaluation
-    * order token-for-token (see Retrieval.bm25ScoresFp). */
+    * order token-for-token (see Retrieval.buildPostings and its
+    * scoring chain). */
   private val bm25Ctes =
     s"""toks AS (SELECT doc_id, $toksSql AS t FROM documents),
        |tf AS (SELECT doc_id, dl, term, count(*) AS tf

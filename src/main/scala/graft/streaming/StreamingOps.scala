@@ -171,17 +171,9 @@ object StreamingOps {
   def streamingStoreProbe(docs: DataFrame, storeSigs: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     import graft.operators.Dedup
-    def banded(sigs: DataFrame) = sigs.select(col("doc_id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(Dedup.Bands - 1)), b =>
-        slice(col("sig"), b * Dedup.RowsPerBand + 1, lit(Dedup.RowsPerBand))))
-        .as(Seq("band", "bandSig")))
-    banded(Dedup.rowMinhashSignatures(docs)).as("x")
-      .join(banded(storeSigs).select(col("doc_id").as("store_id"),
-        col("sig").as("store_sig"), col("band"), col("bandSig")).as("y"),
-        Seq("band", "bandSig"))
-      .select(col("doc_id"), col("store_id"), col("band"),
-        (size(filter(zip_with(col("sig"), col("store_sig"), (a, b) => a === b), x => x))
-          .cast("double") / Dedup.NumHashes).as("est_jaccard"))
+    Dedup.bandJoin(Dedup.rowMinhashSignatures(docs), storeSigs)
+      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("store_id"),
+        col("x.band").as("band"), Dedup.estJaccard(col("x.sig"), col("y.sig")))
       .filter(col("est_jaccard") >= threshold)
   }
 
@@ -204,31 +196,18 @@ object StreamingOps {
       threshold: Double = 0.5,
       tau: Double = 0.9): DataFrame = {
     import graft.operators.Dedup
-    def banded(df: DataFrame) = df.select(df.columns.map(col) :+
-      posexplode(transform(sequence(lit(0), lit(Dedup.Bands - 1)), b =>
-        slice(col("sig"), b * Dedup.RowsPerBand + 1, lit(Dedup.RowsPerBand))))
-        .as(Seq("band", "bandSig")): _*)
     val signed = docs.select(col("doc_id"), col("text"),
         Dedup.rowMinhashSigExpr(col("text")).as("sig"))
       .filter(col("sig").isNotNull)
-    val cand = banded(signed)
-      .join(banded(storeSigs.select(col("doc_id").as("store_id"), col("sig")))
-          .select(col("store_id"), col("sig").as("store_sig"), col("band"), col("bandSig")),
-        Seq("band", "bandSig"))
-      .select(col("doc_id"), col("text"), col("store_id"), col("band"),
-        (size(filter(zip_with(col("sig"), col("store_sig"), (a, b) => a === b), x => x))
-          .cast("double") / Dedup.NumHashes).as("est_jaccard"))
+    val cand = Dedup.bandJoin(signed, storeSigs)
+      .select(col("x.doc_id").as("doc_id"), col("x.text").as("text"),
+        col("y.doc_id").as("store_id"), col("x.band").as("band"),
+        Dedup.estJaccard(col("x.sig"), col("y.sig")))
       .filter(col("est_jaccard") >= threshold)
     val withText = cand.join(
       storeTexts.select(col("doc_id").as("store_id"), col("text").as("store_text")),
       Seq("store_id"))
-    val maxLen = greatest(length(col("text")), length(col("store_text")))
-    withText
-      .withColumn("lev", levenshtein(col("text"), col("store_text")))
-      .withColumn("sim",
-        when(maxLen === 0, lit(1.0)).otherwise(
-          round(lit(1.0) - col("lev").cast("double") / maxLen.cast("double"), 4) + lit(0.0)))
-      .withColumn("verified", (col("sim") >= tau).cast("int"))
+    Dedup.withEditSimilarity(withText, col("text"), col("store_text"), tau)
       .select(col("doc_id"), col("store_id"), col("band"), col("est_jaccard"),
         col("lev"), col("sim"), col("verified"))
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -17,12 +18,19 @@ class RetrievalSpec extends SparkSpec {
   private def corpus(rows: (Long, String)*) = rows.toDF("doc_id", "text")
   private def qs(rows: (Long, String)*) = rows.toDF("query_id", "qtext")
 
+  /** BM25 top-k straight from a corpus: the postings builder plus the
+    * in-memory scorer (no cache — the contract check recomputes). */
+  private def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val (postings, nDocs, sumDl) = Retrieval.buildPostings(docs)(identity)
+    Retrieval.bm25TopKFromPostings(postings, nDocs, sumDl, queries, k)
+  }
+
   test("docs without any query term never appear; matching docs rank by relevance") {
     val docs = corpus(
       1L -> "apple banana cherry",
       2L -> "apple apple apple banana",
       3L -> "durian fig grape")
-    val out = Retrieval.bm25TopK(docs, qs(10L -> "apple"), k = 10).collect()
+    val out = bm25TopK(docs, qs(10L -> "apple"), k = 10).collect()
     assert(out.map(_.getLong(1)).toSet == Set(1L, 2L)) // doc 3 has no hit
     // higher tf (same dl ballpark) wins
     assert(out.sortBy(_.getInt(3)).map(_.getLong(1)).toSeq == Seq(2L, 1L))
@@ -35,7 +43,7 @@ class RetrievalSpec extends SparkSpec {
       2L -> "common alpha",
       3L -> "common beta",
       4L -> "common gamma")
-    val out = Retrieval.bm25TopK(docs, qs(7L -> "common rare"), k = 10)
+    val out = bm25TopK(docs, qs(7L -> "common rare"), k = 10)
       .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
     // doc 1 matches both terms; its margin over the common-only docs
     // must exceed a pure-tf explanation (idf of "rare" with df=1 ≫
@@ -47,9 +55,9 @@ class RetrievalSpec extends SparkSpec {
     val base = (0L until 300L).map(i =>
       i -> s"tok${i % 17} tok${i % 5} tok${(i * 7) % 23} filler${i}")
     val queries = qs(0L -> "tok3 tok11 filler42")
-    val a = Retrieval.bm25TopK(corpus(base: _*).repartition(1), queries, k = 25)
+    val a = bm25TopK(corpus(base: _*).repartition(1), queries, k = 25)
       .orderBy("query_id", "rnk").collect().toSeq
-    val b = Retrieval.bm25TopK(corpus(base: _*).repartition(13), queries, k = 25)
+    val b = bm25TopK(corpus(base: _*).repartition(13), queries, k = 25)
       .orderBy("query_id", "rnk").collect().toSeq
     assert(a == b)
   }
@@ -86,7 +94,7 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.buildIndex(docs, idx)
     val served = Retrieval.searchIndex(spark, idx, queries, k = 25)
       .orderBy("query_id", "rnk")
-    val scanned = Retrieval.bm25TopK(docs, queries, k = 25)
+    val scanned = bm25TopK(docs, queries, k = 25)
       .orderBy("query_id", "rnk").collect().toSeq
     assert(served.collect().toSeq == scanned)
     // the eval-sized query vocab must reach the parquet reader
@@ -177,13 +185,39 @@ class RetrievalSpec extends SparkSpec {
     assert(ex.getMessage.contains("fingerprint"))
   }
 
+  test("deleteFromIndex refuses a tampered sidecar instead of re-signing it") {
+    val idx = tmpDir("bm25-tamper-del")
+    Retrieval.buildIndex(corpus(1L -> "a b c", 2L -> "a d"), idx)
+    val f = java.nio.file.Paths.get(s"$idx/bm25.json")
+    val tampered = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      .replace("\"n_docs\":2", "\"n_docs\":3")
+    java.nio.file.Files.write(f, tampered.getBytes("UTF-8"))
+    val ex = intercept[IllegalArgumentException] {
+      Retrieval.deleteFromIndex(spark, idx, Seq(1L))
+    }
+    assert(ex.getMessage.contains(s"$idx/bm25.json") && ex.getMessage.contains("fingerprint"),
+      ex.getMessage)
+    assert(new String(java.nio.file.Files.readAllBytes(f), "UTF-8") == tampered)
+  }
+
+  test("buildIndex refuses a corpus with a NULL-text doc or a duplicated doc id") {
+    val nullText = Seq((1L, "a b"), (2L, null: String), (3L, "b c")).toDF("doc_id", "text")
+    val dupId = corpus(1L -> "a b", 2L -> "b c", 2L -> "c d")
+    for ((docs, name) <- Seq(nullText -> "null-text", dupId -> "dup-id")) {
+      val idx = tmpDir(s"bm25-contract-$name")
+      val ex = intercept[IllegalArgumentException](Retrieval.buildIndex(docs, idx))
+      assert(ex.getMessage.contains("corpus contract"), s"$name: ${ex.getMessage}")
+      assert(!new java.io.File(s"$idx/bm25.json").exists, s"$name: index was published")
+    }
+  }
+
   test("plan: broadcast-only joins above the checkpointed postings slice; heap top-k") {
     val docs = corpus((0L until 400L).map(i =>
       i -> s"w${i % 29} w${i % 13} w${(i * 3) % 41} pad$i"): _*).repartition(8)
-    val out = Retrieval.bm25TopK(docs, qs(1L -> "w7 w11"), k = 5)
+    val out = bm25TopK(docs, qs(1L -> "w7 w11"), k = 5)
     out.collect()
-    // qt + dfx are broadcast-hash, stats is a broadcast nested-loop
-    // cross; the corpus-sized semi pre-filter ran once inside the
+    // qt + dfx are broadcast-hash, the corpus stats are plan literals;
+    // the corpus-sized semi pre-filter ran once inside the
     // checkpoint job (its LogicalRDD is the scan here) — the corpus
     // never shuffles on behalf of the query set above it
     val bhj = collectPlanNodes(out) {
@@ -194,12 +228,10 @@ class RetrievalSpec extends SparkSpec {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
     }
     assert(smj.isEmpty, "no sort-merge join should appear in the BM25 plan at fixture scale")
-    // exactly one corpus-sized leg remains (the map-only stats scan
-    // + this test input's own repartition); everything else is
-    // eval-bounded: qt distinct, dfx agg, per-(query,doc) score agg,
-    // top-k agg, stats scalar = 6 total. A duplicated corpus leg (the
-    // ReuseExchange failure this operator is shaped around) would
-    // push this past 6.
+    // everything above the checkpoint is eval-bounded: qt distinct,
+    // dfx agg, per-(query,doc) score agg, top-k agg. A duplicated
+    // corpus leg (the ReuseExchange failure this operator is shaped
+    // around) would push this past 6.
     val shuffles = collectShuffles(out)
     assert(shuffles.size <= 6, s"unexpected extra shuffles (corpus leg duplicated?): ${shuffles.size}")
     // bounded-heap top-k, not a window sort
